@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -184,39 +183,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      // local-mode knob: fixture files are ~10-30 MB, so the 128 MB
-      // default gives one scan task per table and idles the other
-      // cores; 8 MB splits restore scan parallelism. (On a real
-      // cluster with TB-scale tables the default is correct.)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // explicit-file reads (BucketStore.readExact/readChecked) pass
-      // per-file root paths; above the default threshold (32) Spark
-      // spawns a distributed listing JOB per read -- pure scheduler
-      // overhead on a local FS. (On a real cluster against object
-      // storage the distributed listing is right; this is a local-mode
-      // knob like maxPartitionBytes above.)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // r18 (guide §1 measured, §4 expression/codegen): the generated-
-      // class cache defaults to 100 entries per JVM; a suite of 136
-      // distinct queries cycles ~10x that many codegen units per sweep,
-      // so EVERY query re-Janino-compiled its stages on EVERY run
-      // (~30% of total suite time, measured 134.5 -> 95.7 s at sf0.1).
-      // Not a local-mode knob: executors pay the same compile on a
-      // cluster whenever a deployment runs a query library larger than
-      // the default cache. Sized to hold this suite with headroom
-      // (~5k classes x ~10-50 KB bytecode - bounded metaspace cost).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // untimed setup: catalog registration + rollup/baseline build
     SparkEntry.catalog(spark, sfDir)

@@ -171,17 +171,6 @@ object GraftHistogram {
       GraftHistMerge(GraftBridge.expression(spark, c)).toAggregateExpression())
   }
 
-  def quantileCol(hist: Column, p: Column, lo: Column, hi: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    def e(c: Column) = GraftBridge.expression(spark, c)
-    GraftBridge.column(GraftHistQuantile(e(hist), e(p), e(lo), e(hi)))
-  }
-
-  def clampedCol(hist: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    GraftBridge.column(GraftHistClamped(GraftBridge.expression(spark, hist)))
-  }
-
   private[functions] def packLongs(a: Array[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 * a.length)
     a.foreach(bb.putLong)

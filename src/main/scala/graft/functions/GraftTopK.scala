@@ -250,12 +250,6 @@ object GraftTopK {
     GraftBridge.column(
       GraftTopKMerge(GraftBridge.expression(spark, c)).toAggregateExpression())
   }
-
-  def extractCol(c: Column, k: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    GraftBridge.column(GraftTopKExtract(
-      GraftBridge.expression(spark, c), GraftBridge.expression(spark, k)))
-  }
 }
 
 /** Aggregate raw keys into a SpaceSaving counter state (binary). */

@@ -46,7 +46,7 @@ object VersionedTable {
   // create new versions; GC only removes superseded ones), so its
   // schema + file index never change while it is the current snapshot.
   // `spark.read.parquet`'s footer inference + listing cost ~55-65 ms
-  // per call (ConstrProbe) and routed queries resolve several rollups
+  // per call (construction alone) and routed queries resolve several rollups
   // per construction. A refresh flips the pointer to a NEW path —
   // a different cache key — so staleness is impossible by construction.
   private val relations = scala.collection.concurrent.TrieMap[

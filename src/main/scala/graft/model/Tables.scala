@@ -18,7 +18,7 @@ object Tables {
   // Source-relation cache (r19, guide §1.2 step 1 / §6 file listing):
   // `spark.read.parquet` runs footer schema inference + a fresh file
   // listing on EVERY call (~55-65 ms measured vs ~7 ms with a known
-  // schema, ConstrProbe) and most queries load 2-6 tables per
+  // schema, construction only) and most queries load 2-6 tables per
   // CONSTRUCTION — ~15-25 s of pure re-inference per 136-query sweep.
   // The fixture dirs are read-only, so the resolved relation (schema +
   // file index — METADATA, never rows) is memoized per (session, path).

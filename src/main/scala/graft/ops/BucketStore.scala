@@ -181,7 +181,7 @@ private[graft] object BucketStore {
 
   // Schema memo for directory-shaped LIVE reads (r19, guide §1.2/§6):
   // `spark.read.parquet(dir)` pays footer schema inference on every
-  // call (~55-65 ms measured, ConstrProbe) but a store's schema is
+  // call (~55-65 ms measured on construction alone) but a store's schema is
   // fixed at writeState time — appends, compactions and rewrites all
   // preserve it. The FIRST read of a dir infers and memoizes; later
   // reads supply the schema explicitly. The file LISTING itself stays

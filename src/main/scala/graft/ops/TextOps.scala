@@ -103,7 +103,7 @@ object TextOps {
     // TWO selects, not a 9-deep withColumn chain (r19, guide §7.2 /
     // plan-construction cost): every withColumn call re-analyzes the
     // growing plan eagerly, ~43 ms per textStats construction measured
-    // (ConstrProbe) vs ~10 ms collapsed. The logical plan after
+    // (construction alone) vs ~10 ms collapsed. The logical plan after
     // CollapseProject is IDENTICAL (same expressions, same two-level
     // projection — quality_score still references the ratio ATTRIBUTES
     // so nothing is evaluated twice per row).

@@ -124,10 +124,6 @@ object Expander {
     col(spark, d.expr, joinPaths(spec.joins).map(_._1)).as(d.name)
   }
 
-  /** Measure aggregate column (named). */
-  def measureCol(spark: SparkSession, spec: MetricViewSpec, m: Measure): Column =
-    col(spark, m.expr, joinPaths(spec.joins).map(_._1)).as(m.name)
-
   /** Rewrite a query-level filter over *dimension names* into source
     * terms by inlining each dimension's expr (so `order_year = 1995`
     * works even though order_year is a derived dim). */

@@ -42,8 +42,8 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Order within a batch matters only for dedup (match before absorb —
   * the [[ContinuousDedup]] contract); the families are
-  * otherwise independent and could fan out in parallel on a real
-  * cluster. The batch is RETRYABLE as a group (r11, ADVICE r10): a
+  * otherwise independent, and [[Folds.launch]] fans them out on big
+  * sessions. The batch is RETRYABLE as a group (r11, ADVICE r10): a
   * content-derived fold id ([[Folds.contentFoldId]] — stable across
   * stream restarts, unlike the per-run `batchId`) rides into every
   * family's applied-fold ledger, so a failure inside one family's

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling harness for the optimization rounds (guide §1:
   * measure first). For every registered query it records, over one
@@ -50,29 +49,15 @@ object QueryProfile {
     val tag = args.headOption.getOrElse("before")
     val prefixes = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val plansDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18"))
     java.nio.file.Files.createDirectories(plansDir)
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
     // config A/Bs without code edits (r19): "k=v;k=v" extra confs —
     // a MEASUREMENT knob only; the driver-contract mains (Bench,
-    // Verify) pin their confs in code
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Verify) take the shared confs unchanged
+    val extraConfs = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").toSeq
+      .flatMap(_.split(";")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = graft.GraftSession.local(extraConfs = extraConfs)
 
     graft.SparkEntry.catalog(spark, sfDir)
     graft.SparkEntry.matCatalog(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolated, repeated measurement of the staged incremental folds —
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   * from ambient host drift without reverse-engineering the full bench.
   *
   * Usage: `sbt "runMain graft.tools.StageProbe [family ...]"` with
-  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_STAGE_RUNS (default 5).
+  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_STAGE_RUNS (default 5).
   *
   * Every family also emits a machine-readable line
   * `PROBE_JSON {"probe":"<family>","reps":N,"stages":{label:[secs…]}}`
@@ -92,27 +91,7 @@ object StageProbe {
     if (args.headOption.contains("ab")) { runAb(args.drop(1)); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_STAGE_RUNS", "5").toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sqlext.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // explicit-file reads (BucketStore.readExact/readChecked) pass
-      // per-file root paths; above the default threshold (32) Spark
-      // spawns a distributed listing JOB per read -- pure scheduler
-      // overhead on a local FS. (On a real cluster against object
-      // storage the distributed listing is right; this is a local-mode
-      // knob like maxPartitionBytes above.)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // generated-class cache sized for the full query library
-      // (r18; measured in Bench.scala - same rationale)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val docs = graft.model.Tables.documents(spark, sfDir)
       .select("doc_id", "source", "text")
     val families = if (args.nonEmpty) args.toSet else Set("spans", "clusters")

@@ -357,4 +357,25 @@ class RoutingSpec extends SparkSpec {
     c.createOrReplace("mv_orders_simple", graft.spec.Specs.mvOrdersSimple)
     c.refresh("mv_orders_simple")
   }
+
+  test("refresh recomputes under an unchanged spec — new source rows are picked up (r5 fix)") {
+    // the spec hash never changes here; only the source grows. Before
+    // the fix, refresh delegated to build's spec-hash idempotence and
+    // served the first snapshot forever.
+    @volatile var cap = 100
+    val work = java.nio.file.Files.createTempDirectory("graft_refresh_force").toString
+    val cat = new graft.api.MetricViewCatalog(spark,
+      n => graft.model.Models.resolve(spark, sfDir, n).limit(cap), Some(work))
+    val v = cat.createOrReplace("mv_orders_simple", graft.spec.Specs.all("mv_orders_simple"))
+    cat.refresh("mv_orders_simple")
+    def totalRows: Long = {
+      import org.apache.spark.sql.functions.sum
+      v.query(Seq("order_status"), Seq("order_count"))
+        .agg(sum("order_count")).collect()(0).getLong(0)
+    }
+    assert(totalRows == 100L)
+    cap = 250 // "new rows arrived"
+    cat.refresh("mv_orders_simple")
+    assert(totalRows == 250L, "refresh served the stale pre-growth snapshot")
+  }
 }

@@ -63,6 +63,12 @@ class ContinuousIngestSpec extends SparkSpec {
       dsir = Some((s"$p/dsir", dsirPred)),
       fingerprints = Some(s"$p/fps"))
     assert(n == 3, s"expected 3 microbatches, got $n")
+    // each fold advances its family's snapshot by exactly one version
+    // (offline v1 + 3 folds)
+    Seq("drift", "spans", "bm25").foreach { f =>
+      assert(graft.ops.SnapshotRoot.currentVersion(s"$p/$f") == "v4",
+        s"$f snapshot after 3 folds")
+    }
 
     // fingerprint store: the stream-maintained leakage card equals one
     // from a store built over the union in one shot (pure per-document
